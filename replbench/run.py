@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Replicator benchmark: runs one workload and prints one JSON result line.
 
-    python3 replbench/run.py --workload mirror_ticks --seed 1 --seconds 20 --trace 0
+    python3 replbench/run.py --workload mirror_ticks --seed 1 --seconds 24 --trace 0
 
 Run from the root of a checkout.  Spark runs as ``local[nproc]`` in this
 process.  All scratch files (inputs, segment stores, sinks, checkpoints,
@@ -270,7 +270,7 @@ def run(args, work: str) -> tuple[dict, dict]:
             "spark.eventLog.compress": "false",
         })
     samples: list[float] = []
-    cpu_s = 0.0
+    cpu_samples: list[float] = []
     with trace.RssSampler() as rss:
         with tracer.span("session") as s_session:
             spark = get_spark(
@@ -289,8 +289,10 @@ def run(args, work: str) -> tuple[dict, dict]:
                 wl.warm_up()
             warm_s = s.dur
             setup_s = get_spark_s + median(prep) + warm_s
+            t_verify = time.time()
             if hasattr(wl, "verify_outputs"):
                 wl.verify_outputs()
+            verify_s = time.time() - t_verify
 
             targets = [
                 (segments_mod, "list_segments", "segments.list"),
@@ -309,9 +311,9 @@ def run(args, work: str) -> tuple[dict, dict]:
                     except Exception as ex:  # a failed op is counted; the run reports it
                         wl.record([f"{type(ex).__name__}: {ex}"[:300]], max(wl.ops_per_op, 1))
                         break
-                    cpu_s += trace.tree_cpu_seconds(trace.process_tree()) - c0
+                    cpu_samples.append(trace.tree_cpu_seconds(trace.process_tree()) - c0)
                     elapsed += s.dur
-                    samples.append(out)
+                    samples.extend(out)
                     wl.record(wl.check(), wl.ops_per_op)
             if hasattr(wl, "final_check"):
                 wl.record(wl.final_check(), 0)
@@ -325,11 +327,13 @@ def run(args, work: str) -> tuple[dict, dict]:
     info = {
         "workload": args.workload, "seed": args.seed, "nproc": nproc,
         "spark_version": pyspark.__version__, "samples_s": [round(x, 3) for x in samples],
+        "cpu_s": [round(x, 2) for x in cpu_samples],
         "attempted": wl.attempted, "failed": wl.failed, "problems": wl.problems[:20],
         "peak_rss_mb_per_process": rss.peak_mb,
         "phase_s": {
             "import": round(s_session.start - t_start, 2), "session": round(get_spark_s, 2),
             "prepare": [round(x, 2) for x in prep], "warm_up": round(warm_s, 2),
+            "verify": round(verify_s, 2),
             "setup": round(t_ops - s_session.start, 2),
             "ops_and_checks": round(t_stop - t_ops, 2), "stop": round(time.time() - t_stop, 2),
         },
@@ -342,7 +346,7 @@ def run(args, work: str) -> tuple[dict, dict]:
         metrics = {
             "setup_s": setup_s,
             "op_p50_s": median(samples) if samples else 0.0,
-            "cpu_s_per_op": cpu_s / len(samples) if samples else 0.0,
+            "cpu_s_per_op": sum(cpu_samples) / len(samples) if samples else 0.0,
             "peak_rss_mb": rss.peak_bytes / 2**20,
         }
         units = END_TO_END

@@ -6,9 +6,9 @@ exposes the same life cycle to ``run.py``:
 * ``prepare()`` — make the seeded inputs (timed as set-up, repeated);
 * ``warm_up()`` — untimed operations so caches and lazy set-up are filled
   before timing (timed as set-up, once);
-* ``op()`` — one timed operation; returns its sample in seconds and leaves
-  whatever ``check()`` needs; ``ops_per_op`` says how many program calls,
-  ticks or queries it made;
+* ``op()`` — one timed operation; returns its samples in seconds and
+  leaves whatever ``check()`` needs; ``ops_per_op`` says how many program
+  calls, ticks or queries it made;
 * ``check()`` — verification outside the timed window; returns problems.
 
 ``counters`` accumulates per-layer counts that need no event log.
@@ -124,7 +124,7 @@ class Replicate(Workload):
         self.op(self.warm_src, self.warm_stream.num_rows)
         self.record(self.check(self.warm_stream), self.ops_per_op)
 
-    def op(self, src: str | None = None, n: int | None = None) -> float:
+    def op(self, src: str | None = None, n: int | None = None) -> list[float]:
         from kafka_replicator_spark.operators.compaction import compact
         from kafka_replicator_spark.operators.egress import assign_segments_greedy, write_segments
         from kafka_replicator_spark.streaming.ingress_stream import run_ingress_stream
@@ -160,7 +160,7 @@ class Replicate(Workload):
         _stream_progress(q, ig.dur, self.counters, "ingress_stream")
         self.published = published
         self.merged = merged
-        return cycle.dur
+        return [cycle.dur]
 
     def check(self, expected: pa.Table | None = None) -> list[str]:
         expected = self.stream if expected is None else expected
@@ -186,9 +186,11 @@ class MirrorTicks(Workload):
     """Closed loop of small drops: each tick lands one file and runs
     ``run_egress_stream`` then ``run_ingress_stream`` on the same
     checkpoints; ``compact`` runs after every ``ticks_per_compaction``-th
-    tick.  One op is one tick (plus that compaction when it is due) and its
-    sample is the tick's lag, so about one sample in four follows a
-    compaction and has to re-read the compacted files."""
+    tick.  One op is one round of ``ticks_per_compaction`` ticks and the
+    compaction that ends it; its samples are the ticks' lags.  The first
+    tick of a round re-reads the files the previous compaction wrote and is
+    slower, so timing whole rounds keeps that share of the samples fixed
+    and their median steady."""
 
     drop_msgs = 4_000
     n_partitions = 8
@@ -202,7 +204,7 @@ class MirrorTicks(Workload):
         self.seen: set[str] = set()
         self.compacted: set[str] = set()
         self.published_bytes = 0  # egress + compaction output, warm-up included
-        self.ops_per_op = 1
+        self.ops_per_op = self.ticks_per_compaction + 1
         for d in ("drops", "store", "sink"):
             os.makedirs(self.path(d), exist_ok=True)
 
@@ -216,14 +218,12 @@ class MirrorTicks(Workload):
             self._tick()
         self._compact()
         self.record(self.check(), self.warm_ticks + 1)
+        self.warm_delivered = _delivered(self.path("state.json"))
 
-    def op(self) -> float:
-        lag = self._tick()
-        self.ops_per_op = 1
-        if (self.tick - self.warm_ticks) % self.ticks_per_compaction == 0:
-            self._compact()
-            self.ops_per_op = 2
-        return lag
+    def op(self) -> list[float]:
+        lags = [self._tick() for _ in range(self.ticks_per_compaction)]
+        self._compact()
+        return lags
 
     def _tick(self) -> float:
         from kafka_replicator_spark.streaming.egress_stream import run_egress_stream
@@ -290,7 +290,7 @@ class MirrorTicks(Workload):
     def final_check(self) -> list[str]:
         """The sink must hold exactly every message dropped so far."""
         delivered = _delivered(self.path("state.json"))
-        self.count("ingress.msgs", delivered)
+        self.count("ingress.msgs", delivered - self.warm_delivered)  # timed ticks only, as rows_read
         live = verify.list_store(self.path("store"))
         self.count("store.bytes_live", sum(live.values()))
         self.count("store.bytes_published", self.published_bytes)
@@ -349,7 +349,7 @@ class QuerySuite(Workload):
         self.query_s[name].append(qs.dur)
         return qs.dur
 
-    def op(self) -> float:
+    def op(self) -> list[float]:
         total = 0.0
         for name in TIMED_QUERIES:
             try:
@@ -357,7 +357,7 @@ class QuerySuite(Workload):
                 self.record([])
             except Exception as ex:  # a failing query is counted, not fatal
                 self.record([f"{name}: {type(ex).__name__}: {ex}"[:300]])
-        return total
+        return [total]
 
     def check(self) -> list[str]:
         return []
