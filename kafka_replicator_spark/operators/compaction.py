@@ -35,6 +35,14 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_replicator_spark.core.codec import (
+    SEGMENT_DATA_COLS,
+    WRITE_RESULT_SCHEMA,
+    publish_segment,
+    raise_on_gap,
+    segment_table,
+)
+
 #: reference defaults, pkg/compaction/config.go:29-39
 DEFAULT_MIN_SEGMENT_COUNT = 10
 DEFAULT_MAX_SEGMENT_COUNT = 10_000
@@ -166,9 +174,10 @@ def merge_segments(
     fan-out; no message bytes cross the network (compactor.go:219-311 as a
     distributed task set).
 
-    Raises ValueError on an offset gap (reference errors with
-    ``missing message range``, compactor.go:219-221); the gapped partition
-    publishes nothing.
+    An offset gap (reference ``missing message range``,
+    compactor.go:219-221) does not fail the task: the gapped output segment
+    publishes nothing and its row comes back with ``path`` NULL, which
+    :func:`compact` raises as ``SegmentGapError`` before any delete.
     """
     if isinstance(plan, DataFrame):
         meta = plan.select(
@@ -178,10 +187,7 @@ def merge_segments(
     else:
         meta = plan
     if not meta:
-        return spark.createDataFrame(
-            [], schema="region string, topic string, partition_id int, level int, "
-            "start_offset long, end_offset long, message_count long, size_bytes long, path string"
-        )
+        return spark.createDataFrame([], schema=WRITE_RESULT_SCHEMA)
     out_levels = {}  # (topic, partition) -> max input level + 1
     floors = {}
     by_part: dict = {}
@@ -240,19 +246,10 @@ def merge_segments(
     def merge_task(spec_table):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
-
-        from kafka_replicator_spark.operators.egress import (
-            SEGMENT_DATA_COLS,
-            _arrow_segment_types,
-            _publish_segment_table,
-        )
 
         spec = spec_table.to_pylist()[0]
         c_lo, c_hi = spec["chunk_lo"], spec["chunk_hi"]
-        arrow_types = _arrow_segment_types()
-        canonical = pa.schema([(c, arrow_types[c]) for c in SEGMENT_DATA_COLS])
         srt = sorted(zip(spec["starts"], spec["ends"], spec["levels"], spec["paths"]))
         plain_parts = []
         for s, e, lvl, path in srt:
@@ -260,16 +257,7 @@ def merge_segments(
                 path,
                 filters=[("msg_offset", ">=", c_lo), ("msg_offset", "<=", c_hi)],
             )
-            cols = []
-            for c in SEGMENT_DATA_COLS:  # fill columns absent in old files
-                if c in t.column_names:
-                    col = t.column(c)
-                    if col.type != arrow_types[c]:
-                        col = pc.cast(col, arrow_types[c])
-                else:
-                    col = pa.nulls(t.num_rows, type=arrow_types[c])
-                cols.append(col)
-            plain_parts.append((s, e, lvl, pa.Table.from_arrays(cols, schema=canonical)))
+            plain_parts.append((s, e, lvl, segment_table(t)))
         # r13 opt: when the input extents are DISJOINT (metadata check — the
         # steady egress case: greedy assignment emits non-overlapping
         # segments) and every file is internally strictly offset-sorted (the
@@ -326,10 +314,10 @@ def merge_segments(
                 if not keep.all():
                     merged = merged.filter(pa.array(keep))
             out = merged.select(SEGMENT_DATA_COLS)
-        return _publish_segment_table(
+        return publish_segment(
             out, root=root, region=region, topic=spec["topic"],
             partition_id=int(spec["partition_id"]), level=int(spec["out_level"]),
-            require_dense=True,
+            dense=True,
         )
 
     spec_schema = (
@@ -341,15 +329,10 @@ def merge_segments(
         spark.sparkContext.parallelize([tuple(s.values()) for s in specs], 1),
         schema=spec_schema,
     )
-    result_schema = (
-        "region string, topic string, partition_id int, level int, "
-        "start_offset long, end_offset long, message_count long, "
-        "size_bytes long, path string"
-    )
     return (
         spec_df.repartition(len(specs), "topic", "partition_id", "chunk_lo")
         .groupBy("topic", "partition_id", "chunk_lo")
-        .applyInArrow(lambda t: merge_task(t), schema=result_schema)
+        .applyInArrow(lambda t: merge_task(t), schema=WRITE_RESULT_SCHEMA)
     )
 
 
@@ -384,7 +367,9 @@ def compact(
     Returns the metadata of the newly written segments (materialized before
     deletion so the pipeline is list-once).  Fully-superseded in-band
     segments are deleted alongside the merge inputs once their partition's
-    compaction succeeds (reference compactor.go:192-203 + 314-351).
+    compaction succeeds (reference compactor.go:192-203 + 314-351).  An
+    offset gap raises ``SegmentGapError`` (a ``ValueError``) before any
+    delete.
     """
     from kafka_replicator_spark.sources.segments import list_segments
 
@@ -399,16 +384,8 @@ def compact(
         spark, plan_rows, root=root, region=region,
         max_output_messages=max_output_messages,
     )
-    try:
-        result = written.collect()  # force the write before deleting inputs
-    except Exception as e:  # surface the writer's inline gap check as ValueError
-        if "missing message range" in str(e):
-            first = next(
-                (ln for ln in str(e).splitlines() if "missing message range" in ln),
-                "missing message range (offset gap)",
-            )
-            raise ValueError(first.strip()) from e
-        raise
+    result = written.collect()  # force the write before deleting inputs
+    raise_on_gap(result)
     if delete_inputs and result:
         delete_segment_files(input_paths)
     return spark.createDataFrame(result, schema=written.schema)

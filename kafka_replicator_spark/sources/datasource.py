@@ -54,36 +54,19 @@ class SegmentReader(DataSourceReader):
         self.from_offset = int(options.get("from_offset", "-1"))
 
     def partitions(self):
-        # driver-side listing — identical scope rules as list_segments (S3)
-        import os
+        # driver-side listing — the same store walk and scope rules as
+        # list_segments (S3)
+        from kafka_replicator_spark.core.codec import walk_segments
 
-        from kafka_replicator_spark.core.codec import parse_segment_path
-
-        base = self.root.rstrip("/")
-        for p in (self.region, self.topic,
-                  None if self.partition_id is None else str(self.partition_id)):
-            if p is None:
-                break
-            base = f"{base}/{p}"
-        out = []
-        for dirpath, _dn, filenames in os.walk(base):
-            if os.path.basename(os.path.normpath(dirpath)) == "temp":
-                continue
-            for fn in filenames:
-                path = os.path.join(dirpath, fn)
-                try:
-                    seg = parse_segment_path(path)
-                except ValueError:
-                    continue
-                if self.from_offset >= 0 and seg.end_offset < self.from_offset:
-                    continue  # F2: fully-delivered segments pruned at plan time
-                out.append(
-                    SegmentInputPartition(
-                        path, seg.region, seg.topic, seg.partition_id,
-                        seg.level, seg.start_offset, seg.end_offset,
-                    )
-                )
-        return out
+        return [
+            SegmentInputPartition(
+                path, seg.region, seg.topic, seg.partition_id,
+                seg.level, seg.start_offset, seg.end_offset,
+            )
+            for path, seg in walk_segments(self.root, self.region, self.topic, self.partition_id)
+            # F2: fully-delivered segments pruned at plan time
+            if self.from_offset < 0 or seg.end_offset >= self.from_offset
+        ]
 
     def read(self, partition: SegmentInputPartition):
         # executor-side: stream the file as Arrow batches with constant
@@ -91,6 +74,9 @@ class SegmentReader(DataSourceReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from kafka_replicator_spark.core.codec import SEGMENT_ARROW_TYPES
+
+        header_type = SEGMENT_ARROW_TYPES["headers"]
         pf = pq.ParquetFile(partition.path)
         for batch in pf.iter_batches():
             n = batch.num_rows
@@ -110,9 +96,6 @@ class SegmentReader(DataSourceReader):
                 pa.array([partition.start_offset] * n, pa.int64()),
                 pa.array([partition.end_offset] * n, pa.int64()),
             ]
-            header_type = pa.list_(
-                pa.struct([("key", pa.string()), ("value", pa.binary())])
-            )
             if "headers" in batch.schema.names:
                 headers = batch.column("headers").cast(header_type)
             else:  # pre-headers segment files: surface as NULL

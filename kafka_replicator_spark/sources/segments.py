@@ -18,7 +18,11 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_replicator_spark.core.codec import parse_segment_path, parse_segment_path_cols
+from kafka_replicator_spark.core.codec import (
+    footer_message_count,
+    parse_segment_path_cols,
+    walk_segments,
+)
 from kafka_replicator_spark.core.schema import SEGMENT_DATA_DDL, SEGMENT_SCHEMA
 
 
@@ -32,49 +36,28 @@ def list_segments(
 ) -> DataFrame:
     """List segment files under ``root`` → SEGMENT_SCHEMA DataFrame.
 
-    Filters narrow the walk prefix like the reference's scoped LIST
+    Each filter given scopes the listing like the reference's scoped LIST
     (s3_segment_store.go:212-215) — partition pruning at the listing layer.
     ``read_footers=True`` also loads messageCount from each parquet footer
     (an extra HEAD-scale read per file; off by default).
     """
-    base = root.rstrip("/")
-    for part in (region, topic, partition_id if partition_id is None else str(partition_id)):
-        if part is None:
-            break
-        base = f"{base}/{part}"
-
     rows = []
-    for dirpath, _dirnames, filenames in os.walk(base):
-        if os.path.basename(os.path.normpath(dirpath)) == "temp":
-            continue  # uncommitted temp objects are invisible (two-phase publish)
-        for fn in filenames:
-            path = os.path.join(dirpath, fn)
-            try:
-                seg = parse_segment_path(path)
-            except ValueError:
-                continue
-            st = os.stat(path)
-            count = None
-            if read_footers:
-                import pyarrow.parquet as pq
-
-                meta = pq.ParquetFile(path).metadata.metadata or {}
-                raw = meta.get(b"messageCount")
-                count = int(raw) if raw is not None else None
-            rows.append(
-                (
-                    seg.region,
-                    seg.topic,
-                    seg.partition_id,
-                    seg.level,
-                    seg.start_offset,
-                    seg.end_offset,
-                    count,
-                    int(st.st_size),
-                    datetime.fromtimestamp(st.st_mtime, tz=timezone.utc).replace(tzinfo=None),
-                    path,
-                )
+    for path, seg in walk_segments(root, region, topic, partition_id):
+        st = os.stat(path)
+        rows.append(
+            (
+                seg.region,
+                seg.topic,
+                seg.partition_id,
+                seg.level,
+                seg.start_offset,
+                seg.end_offset,
+                footer_message_count(path) if read_footers else None,
+                int(st.st_size),
+                datetime.fromtimestamp(st.st_mtime, tz=timezone.utc).replace(tzinfo=None),
+                path,
             )
+        )
     # ONE partition: the listing is metadata-scale (path strings, not
     # data), and the default 32-slice parallelize makes every downstream
     # metadata job a 32-task job of empty partitions — measured ~35% of

@@ -24,9 +24,9 @@ escalation (pkg/ingress/worker.go:110-154), minus the wall-clock backoff
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
-import sys
 from dataclasses import dataclass, field
 from datetime import timedelta  # noqa: F401  (signature annotations)
 
@@ -37,8 +37,6 @@ from pyspark.sql import functions as F
 
 from kafka_replicator_spark.core.codec import parse_segment_path_cols
 from kafka_replicator_spark.core.schema import SEGMENT_DATA_DDL
-
-SEGMENT_DATA_SCHEMA = SEGMENT_DATA_DDL
 
 
 def _local_path(p: str) -> str:
@@ -82,44 +80,21 @@ class IngressState:
     errors: dict[str, int] = field(default_factory=dict)
 
     @classmethod
+    def _persisted(cls) -> list[str]:
+        """Every field but ``path``, in declaration order (the JSON layout)."""
+        return [f.name for f in dataclasses.fields(cls) if f.name != "path"]
+
+    @classmethod
     def load(cls, path: str) -> "IngressState":
         if os.path.exists(path):
             raw = json.load(open(path))
-            return cls(
-                path=path,
-                checkpoints=raw.get("checkpoints", {}),
-                late_counts=raw.get("late_counts", {}),
-                first_seen_batch=raw.get("first_seen_batch", {}),
-                first_seen_ts=raw.get("first_seen_ts", {}),
-                gap_since_ts=raw.get("gap_since_ts", {}),
-                pending_paths=raw.get("pending_paths", {}),
-                batches_run=raw.get("batches_run", 0),
-                messages_lost=raw.get("messages_lost", 0),
-                messages_produced=raw.get("messages_produced", {}),
-                last_lag_ns=raw.get("last_lag_ns", {}),
-                errors=raw.get("errors", {}),
-            )
+            return cls(path=path, **{k: raw[k] for k in cls._persisted() if k in raw})
         return cls(path=path)
 
     def save(self) -> None:
         tmp = self.path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "checkpoints": self.checkpoints,
-                    "late_counts": self.late_counts,
-                    "first_seen_batch": self.first_seen_batch,
-                    "first_seen_ts": self.first_seen_ts,
-                    "gap_since_ts": self.gap_since_ts,
-                    "pending_paths": self.pending_paths,
-                    "batches_run": self.batches_run,
-                    "messages_lost": self.messages_lost,
-                    "messages_produced": self.messages_produced,
-                    "last_lag_ns": self.last_lag_ns,
-                    "errors": self.errors,
-                },
-                f,
-            )
+            json.dump({k: getattr(self, k) for k in self._persisted()}, f)
         os.replace(tmp, self.path)
 
     def snapshot(self) -> dict:
@@ -192,22 +167,13 @@ def run_ingress_stream(
         lost_segment_timeout.total_seconds() if lost_segment_timeout else None
     )
     stream = (
-        spark.readStream.schema(SEGMENT_DATA_SCHEMA)
+        spark.readStream.schema(SEGMENT_DATA_DDL)
         .option("pathGlobFilter", "*.parquet")
         .option("recursiveFileLookup", "true")
         .parquet(seg_root)
     )
 
     def deliver(batch_df: DataFrame, epoch_id: int) -> None:
-        _prof = os.environ.get("KRS_INGRESS_PROF") == "1"
-        _t = [_time_mod.perf_counter()]
-
-        def _mark(label: str) -> None:
-            if _prof:
-                now = _time_mod.perf_counter()
-                print(f"# ingress-prof {label}: {now - _t[0]:.3f}s", file=sys.stderr)
-                _t[0] = now
-
         state = IngressState.load(state_path)
         df = batch_df.select("*", *parse_segment_path_cols(), F.input_file_name().alias("src_path"))
         # re-read files held back in earlier batches (late/gated) — the file
@@ -218,7 +184,7 @@ def run_ingress_stream(
         held = [p for p in held if os.path.exists(p)]
         if held:
             df = df.unionByName(
-                spark.read.schema(SEGMENT_DATA_SCHEMA)
+                spark.read.schema(SEGMENT_DATA_DDL)
                 .parquet(*held)
                 .select("*", *parse_segment_path_cols(), F.input_file_name().alias("src_path"))
             )
@@ -260,7 +226,6 @@ def run_ingress_stream(
         # runs over segment extents, not rows, so an *internal* gap inside a
         # batch holds back exactly the files above the gap (O1 heap order,
         # reference worker.go:110-154)
-        _mark("construct")
         # per-file row count + min event ts ride the same aggregate: the
         # §2.11 meters can then be derived driver-side (below) instead of a
         # separate per-batch collect job over the delivered frame
@@ -274,7 +239,6 @@ def run_ingress_stream(
             )
             .collect()
         )
-        _mark("ranges_collect")
         by_part: dict[str, list] = {}
         for r in ranges:
             by_part.setdefault(f"{r['topic']}/{r['partition_id']}", []).append(r)
@@ -334,7 +298,6 @@ def run_ingress_stream(
                 state.checkpoints[key] = int(frontier)
 
         state.pending_paths = pending
-        _mark("walk")
         if frontiers:
             fr = spark.createDataFrame(
                 [
@@ -372,7 +335,6 @@ def run_ingress_stream(
                 err_state.save()
                 df.unpersist()
                 raise
-            _mark("write")
             # §2.11 meters: produced count + replication lag per partition
             # (A3 min-ts over the produced batch, reference worker.go:438-448).
             # Derived driver-side from the per-file aggregates already in
@@ -419,10 +381,8 @@ def run_ingress_stream(
                     state.messages_produced[key] = state.messages_produced.get(key, 0) + m["n"]
                     if m["min_ts"] is not None:
                         state.last_lag_ns[key] = now_ns - int(m["min_ts"])
-        _mark("meters")
         df.unpersist()
         state.save()  # T8 checkpoint-per-batch
-        _mark("save")
 
     q = (
         stream.writeStream.foreachBatch(deliver)

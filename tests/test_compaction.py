@@ -9,6 +9,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_replicator_spark.core.codec import SegmentGapError
 from kafka_replicator_spark.core.schema import SEGMENT_SCHEMA
 from kafka_replicator_spark.operators.compaction import (
     compact,
@@ -75,7 +76,7 @@ def test_gap_raises_and_nothing_written(spark, tmp_path):
     root = str(tmp_path)
     _write_range(spark, root, 0, 0, 9)
     _write_range(spark, root, 0, 20, 29)  # gap [10..19]
-    with pytest.raises(ValueError, match="missing message range"):
+    with pytest.raises(SegmentGapError, match="^missing message range"):
         compact(spark, root, region=REGION, min_count=2, min_bytes=1)
     listed = list_segments(spark, root).collect()
     assert sorted(r["level"] for r in listed) == [0, 0]  # nothing deleted/added
@@ -311,15 +312,12 @@ def test_disjoint_fast_path_rejects_extent_lying_file(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafka_replicator_spark.operators.egress import (
-        SEGMENT_DATA_COLS,
-        _arrow_segment_types,
-    )
+    from kafka_replicator_spark.core.codec import SEGMENT_ARROW_TYPES as types
+    from kafka_replicator_spark.core.codec import SEGMENT_DATA_COLS
 
     root = str(tmp_path)
     _write_range(spark, root, 0, 10, 19)  # honest file
     # forged file: named 0-9, actually holds 0-12 (duplicating 10-12)
-    types = _arrow_segment_types()
     offs = list(range(0, 13))
     forged = pa.Table.from_arrays(
         [
@@ -356,13 +354,10 @@ def test_writer_fallback_sorts_shuffled_group(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafka_replicator_spark.operators.egress import (
-        SEGMENT_DATA_COLS,
-        _arrow_segment_types,
-        _write_one_segment_arrow,
-    )
+    from kafka_replicator_spark.core.codec import SEGMENT_ARROW_TYPES as types
+    from kafka_replicator_spark.core.codec import SEGMENT_DATA_COLS
+    from kafka_replicator_spark.operators.egress import _write_segment_group
 
-    types = _arrow_segment_types()
     offs = [5, 2, 9, 0, 7, 1, 8, 3, 6, 4]  # shuffled, dense 0..9
     group = pa.Table.from_arrays(
         [
@@ -376,9 +371,8 @@ def test_writer_fallback_sorts_shuffled_group(tmp_path):
         ],
         names=["topic", "partition_id"] + SEGMENT_DATA_COLS,
     )
-    res = _write_one_segment_arrow(
-        group, root=str(tmp_path), region=REGION, level=0,
-        data_cols=SEGMENT_DATA_COLS, require_dense=True,
+    res = _write_segment_group(
+        group, root=str(tmp_path), region=REGION, level=0, data_cols=SEGMENT_DATA_COLS,
     )
     row = res.to_pylist()[0]
     assert (row["start_offset"], row["end_offset"], row["message_count"]) == (0, 9, 10)

@@ -76,3 +76,48 @@ def test_streaming_source_discovers_incrementally(spark, messages, tmp_path):
         ]
     finally:
         q.stop()
+
+
+def test_scoped_listing_filters_every_field(spark, tmp_path):
+    """A scope field after an unset one still filters: ``topic`` without
+    ``region`` and ``partition_id`` without ``topic`` list only their own
+    segments, in both ``list_segments`` and the ``kafka_segments`` options."""
+    root = str(tmp_path)
+    rows = [
+        (topic, pid, o, b"k", b"v", 1_553_000_000_000 + o, o // 10)
+        for topic in ("a", "b")
+        for pid in (0, 5)
+        for o in range(20)
+    ]
+    df = spark.createDataFrame(
+        rows, schema="topic string, partition_id int, msg_offset long, "
+        "msg_key binary, payload binary, ts_ns long, segment_seq long"
+    )
+    write_segments(df, root=root, region="dsrc", level=0).collect()
+
+    def listed(**scope):
+        return sorted(
+            (r["topic"], r["partition_id"], r["start_offset"])
+            for r in list_segments(spark, root, **scope).collect()
+        )
+
+    assert listed(topic="a") == [("a", 0, 0), ("a", 0, 10), ("a", 5, 0), ("a", 5, 10)]
+    assert listed(partition_id=5) == [("a", 5, 0), ("a", 5, 10), ("b", 5, 0), ("b", 5, 10)]
+    assert listed(region="dsrc", partition_id=0) == [
+        ("a", 0, 0), ("a", 0, 10), ("b", 0, 0), ("b", 0, 10)
+    ]
+    assert listed(region="dsrc", topic="b", partition_id=5) == [("b", 5, 0), ("b", 5, 10)]
+
+    datasource.register(spark)
+
+    def via_format(**options):
+        reader = spark.read.format("kafka_segments").option("root", root)
+        for k, v in options.items():
+            reader = reader.option(k, v)
+        return sorted(
+            (r["topic"], r["partition_id"], r["n"])
+            for r in reader.load().groupBy("topic", "partition_id").agg(F.count("*").alias("n")).collect()
+        )
+
+    assert via_format(topic="a") == [("a", 0, 20), ("a", 5, 20)]
+    assert via_format(partition="5") == [("a", 5, 20), ("b", 5, 20)]

@@ -39,7 +39,7 @@ def test_write_produces_expected_segments(spark, messages, written):
         assert r["region"] == REGION
 
 
-def test_listing_matches_write_metadata(spark, seg_root, written):
+def test_listing_matches_write_metadata(spark, seg_root, written, tmp_path):
     listed = list_segments(spark, seg_root, read_footers=True).collect()
     assert len(listed) == len(written)
     by_path = {r["path"]: r for r in written}
@@ -48,6 +48,32 @@ def test_listing_matches_write_metadata(spark, seg_root, written):
         assert (seg["start_offset"], seg["end_offset"]) == (w["start_offset"], w["end_offset"])
         assert seg["message_count"] == w["message_count"]  # footer KV metadata
         assert seg["size_bytes"] > 0
+
+    # a compacted level-1 file carries the same footer keys and column types
+    # as the level-0 files it merges (compacted in a copy of one partition,
+    # so the shared store stays intact)
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from kafka_replicator_spark.core.codec import FOOTER_KEYS
+    from kafka_replicator_spark.operators.compaction import compact
+
+    part = min((r["topic"], r["partition_id"]) for r in written)
+    l0 = sorted(r["path"] for r in written if (r["topic"], r["partition_id"]) == part)
+    root = str(tmp_path)
+    for p in l0:
+        dst = os.path.join(root, os.path.relpath(p, seg_root))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        shutil.copy(p, dst)
+    out = compact(spark, root, region=REGION, min_count=2, min_bytes=1).collect()
+    assert [r["level"] for r in out] == [1]
+    s0, s1 = pq.read_schema(l0[0]), pq.read_schema(out[0]["path"])
+    footer = lambda s: {k.decode() for k in s.metadata} - {"ARROW:schema"}  # noqa: E731
+    assert footer(s0) == footer(s1) == set(FOOTER_KEYS)
+    for name in s0.names:
+        assert s1.field(name).type == s0.field(name).type
 
 
 def test_roundtrip_stream_identical(spark, messages, seg_root, written):
@@ -121,33 +147,6 @@ def test_heap_order_prefers_longer_on_tie(spark):
     assert [r["path"] for r in ordered] == ["b", "a", "c"]
 
 
-def test_native_writer_roundtrip(spark, messages, tmp_path):
-    """write_segments_native: same layout and stream contents as the
-    default writer, metadata from parquet stats instead of footer KV."""
-    from kafka_replicator_spark.operators.egress import write_segments_native
-
-    root = str(tmp_path)
-    tagged = assign_segments_by_count(messages, max_messages=100)
-    meta = write_segments_native(tagged, root=root, region=REGION, level=0).collect()
-    assert sum(r["message_count"] for r in meta) == messages.count()
-    for r in meta:
-        assert r["end_offset"] - r["start_offset"] + 1 == r["message_count"]
-    listed = list_segments(spark, root)
-    assert listed.count() == len(meta)
-    back = read_segment_files(spark, [r["path"] for r in meta])
-    assert back.count() == messages.count()
-    # order within each file preserved (O3)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("topic", "partition_id").orderBy("msg_offset")
-    gaps = (
-        back.withColumn("prev", F.lag("msg_offset").over(w))
-        .filter(F.col("prev").isNotNull() & (F.col("msg_offset") != F.col("prev") + 1))
-        .count()
-    )
-    assert gaps == 0
-
-
 def test_headers_survive_lifecycle(spark, messages, tmp_path):
     """K1 headers: messages carrying Kafka headers keep them byte-identical
     through egress → compact → replay (reference parquet struct
@@ -201,16 +200,3 @@ def test_message_size_includes_headers(spark):
     got = df.select(message_size_col().alias("sz")).collect()[0]["sz"]
     assert got == 16 + 1 + 3 + (2 + 2) + (4 + 4)
 
-
-def test_native_writer_gap_check(spark, messages, tmp_path):
-    import pytest as _pytest
-
-    from kafka_replicator_spark.operators.egress import write_segments_native
-
-    gappy = messages.filter(
-        (F.col("msg_offset") < 50) | (F.col("msg_offset") >= 60)
-    ).withColumn("segment_seq", F.lit(0))
-    with _pytest.raises(ValueError, match="missing message range"):
-        write_segments_native(
-            gappy, root=str(tmp_path), region=REGION, level=0, require_dense=True
-        )
